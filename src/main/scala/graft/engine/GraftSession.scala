@@ -23,6 +23,8 @@ object GraftSession {
     *
     * Engine-specific knobs (the `spark.graft.*` namespace, settable per
     * session like any SQL conf):
+    * Boolean knobs are read through [[boolConf]]: a malformed value means
+    * the default.
     *  - `spark.graft.partialReduce` (default false, like the reference's
     *    `partial_reduce`): extra merge aggregation below the exchange —
     *    see [[graft.plans.PartialReduce]], A/B-measured by q34 vs q34b.
@@ -92,6 +94,21 @@ object GraftSession {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (64L * 1024 * 1024).toString)
   }
 
+  /** A `spark.graft.*` boolean knob: `true` or `false` (any case, spaces
+    * trimmed). Unset or any other value ("1", "yes", a typo) is None, so
+    * the caller falls back to its default instead of failing the query
+    * or taking a branch nobody asked for.
+    */
+  def boolConf(spark: SparkSession, key: String): Option[Boolean] =
+    spark.conf.getOption(key).map(_.trim.toLowerCase(java.util.Locale.ROOT)).collect {
+      case "true" => true
+      case "false" => false
+    }
+
+  /** Builder with [[defaultConf]] and [[GraftExtensions]]: the engine's
+    * plan rules and every SQL function, registered once per session.
+    * Nothing else registers functions; Column code needs no setup call.
+    */
   def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder = {
     val b = SparkSession.builder().master(master).appName(appName)
       .withExtensions(new GraftExtensions)

@@ -89,34 +89,37 @@ object Tables {
     * that follows to a single task — at bench SF the whole documents
     * table is one split, so the text/vector operators ran 1-wide on a
     * 32-core session. The condition derives from INPUT SIZE, not a local
-    * constant: fan out only when the scan's estimated split count is
-    * under half the session's parallelism — at 100 TB scans split
-    * naturally into thousands of tasks, the condition is false, and no
-    * payload shuffle is added. Hash on the id column (deterministic,
-    * retry-safe — never `rand()`, guide §2.5).
+    * constant ([[isNarrow]]): at 100 TB scans split naturally into
+    * thousands of tasks, the condition is false, and no payload shuffle
+    * is added. Hash on the id column (deterministic, retry-safe — never
+    * `rand()`, guide §2.5).
     */
   def fanOutIfNarrow(df: DataFrame, keyCol: String, fileBytes: Long): DataFrame = {
     val spark = df.sparkSession
     // A/B toggle (spark.graft.fanout.enabled, default on) — lets the
     // interleaved same-JVM ConfAb harness measure this rule per query
-    // without code flips; production behavior is the default.
-    // Tolerant parse: a malformed conf value ("1", "TRUE ") degrades to
-    // the default instead of throwing mid-plan-construction (r18 ADVICE).
-    if (spark.conf.getOption("spark.graft.fanout.enabled")
-          .exists(v => !v.trim.equalsIgnoreCase("true"))) return df
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val splits = math.max(1L, (fileBytes + maxSplit - 1) / maxSplit)
-    val target = spark.sparkContext.defaultParallelism
-    if (splits * 2 >= target) df
-    else df.repartition(target, col(keyCol))
+    // without code flips; production behavior is the default, and a
+    // malformed value ("1") falls back to it.
+    if (!GraftSession.boolConf(spark, "spark.graft.fanout.enabled").getOrElse(true) ||
+        !isNarrow(spark, fileBytes)) df
+    else df.repartition(spark.sparkContext.defaultParallelism, col(keyCol))
   }
 
-  /** [[load]] + [[fanOutIfNarrow]] keyed on `keyCol` — the entry point
-    * for corpora feeding expensive narrow operators (text shingling,
-    * vector math). Separate from [[load]] on purpose: relational queries
-    * shuffle at their first join/agg anyway, so fanning their scans
-    * would add an exchange for nothing.
+  /** Whether a scan of `fileBytes` is NARROW for this session: its
+    * estimated split count is under half the session parallelism. The
+    * one size predicate behind [[fanOutIfNarrow]] and other size-derived
+    * per-query decisions: a frame derived from a narrow fixture scan is
+    * small by construction; one derived from a naturally-splitting corpus
+    * is not. False at 100 TB and for [[tableBytes]]'s stat-failure value.
     */
+  def isNarrow(spark: SparkSession, fileBytes: Long): Boolean = {
+    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+    // Ceiling division without `fileBytes + maxSplit - 1`, which wraps
+    // negative for Long.MaxValue and would read a failed stat as narrow.
+    val splits = math.max(1L, fileBytes / maxSplit + (if (fileBytes % maxSplit > 0) 1 else 0))
+    splits * 2 < spark.sparkContext.defaultParallelism
+  }
+
   /** Hadoop-FS byte size of a fixture table. Hadoop FileSystem, not
     * java.io.File: the fixture dir may be any Hadoop-FS URI (file:/,
     * hdfs:/, s3a:/ — the Streams.priorBatchDirs lesson), and a local-FS
@@ -133,20 +136,12 @@ object Tables {
         .getContentSummary(p).getLength
     } catch { case _: Exception => Long.MaxValue }
 
-  /** Whether `name`'s scan is NARROW for this session — estimated split
-    * count under half the session parallelism (the [[fanOutIfNarrow]]
-    * condition, exposed for other size-derived per-query decisions:
-    * a frame derived from a narrow fixture scan is small by
-    * construction; one derived from a naturally-splitting corpus is
-    * not). False at 100 TB and on stat failure.
+  /** [[load]] + [[fanOutIfNarrow]] keyed on `keyCol` — the entry point
+    * for corpora feeding expensive narrow operators (text shingling,
+    * vector math). Separate from [[load]] on purpose: relational queries
+    * shuffle at their first join/agg anyway, so fanning their scans
+    * would add an exchange for nothing.
     */
-  def isNarrowScan(spark: SparkSession, dir: String, name: String): Boolean = {
-    val bytes = tableBytes(spark, dir, name)
-    val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val splits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    splits * 2 < spark.sparkContext.defaultParallelism
-  }
-
   def loadFanned(spark: SparkSession, dir: String, name: String,
                  keyCol: String): DataFrame =
     fanOutIfNarrow(load(spark, dir, name), keyCol,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Cols
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -103,15 +103,8 @@ object Bpe {
     override protected def withNewChildInternal(c: Expression): BpeEncode = copy(c)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode", exprs => BpeEncode(exprs.head), "scala_udf")
-
   /** Encode pre-normalized text (pass [[TextFunctions.normText]] output). */
-  def bpeEncode(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("bpe_encode", text)
-  }
+  def bpeEncode(text: Column): Column = Cols.of(BpeEncode(Cols.expr(text)))
 
   /** True subword token count — the budget a trainer-faithful packer uses
     * (vs the regex proxy [[TextFunctions.bpeTokenCount]]).
@@ -268,17 +261,9 @@ object Bpe {
     bigVocabMemo.getOrElseUpdate(spark.sparkContext.applicationId,
       spark.sparkContext.broadcast(buildBigVocab()))
 
-  def registerBig(spark: SparkSession): Unit = {
-    val bc = bigVocabBc(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode_big", exprs => BpeBigEncode(exprs.head, bc), "scala_udf")
-  }
-
   /** Encode pre-normalized text against the broadcast big vocab. */
-  def bpeEncodeBig(text: Column): Column = {
-    registerBig(SparkSession.active)
-    call_function("bpe_encode_big", text)
-  }
+  def bpeEncodeBig(text: Column): Column =
+    Cols.of(BpeBigEncode(Cols.expr(text), bigVocabBc(SparkSession.active)))
 
   def bpeCountBig(text: Column): Column =
     org.apache.spark.sql.functions.size(bpeEncodeBig(text))

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Cols
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -192,12 +192,9 @@ object FastText {
   def train(df: org.apache.spark.sql.DataFrame, text: Column,
             posLabel: Column): Array[Int] = {
     import org.apache.spark.sql.functions._
-    val spark = df.sparkSession
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fasttext_features", exprs => FastTextFeatures(exprs.head), "scala_udf")
     val rows = df
       .select(when(posLabel, 1).otherwise(0).as("__p"),
-        explode(call_function("fasttext_features", text)).as("__f"))
+        explode(features(text)).as("__f"))
       .groupBy(col("__f"))
       .agg(sum(col("__p")).as("np"), sum(lit(1) - col("__p")).as("nn"))
       .collect()
@@ -209,51 +206,26 @@ object FastText {
     w
   }
 
-  /** Feature-index column (training-side; registers the expression). */
-  def features(text: Column): Column = features(text, SparkSession.active)
+  /** Feature-index column (training side). */
+  def features(text: Column): Column = Cols.of(FastTextFeatures(Cols.expr(text)))
 
-  /** [[features]] against an explicit session (temp-function registries
-    * are per-session — a `newSession()` caller must register there).
-    */
-  def features(text: Column, spark: SparkSession): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fasttext_features", exprs => FastTextFeatures(exprs.head), "scala_udf")
-    call_function("fasttext_features", text)
-  }
-
-  private val regCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Score against a TRAINED weight broadcast — fresh temp-function name
-    * per call (unlike the planted table, several trained models may
-    * coexist in one session; the KMeans.distsColumn mechanism).
+  /** Score against a TRAINED weight broadcast (several trained models may
+    * coexist in one session). The broadcast rides in the expression, so
+    * it is freed with the last plan that uses it.
     */
   def scoreWith(text: Column,
-      w: org.apache.spark.broadcast.Broadcast[Array[Int]],
-      spark: SparkSession): Column = {
-    val name = s"fasttext_score_trained_${regCounter.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => FastTextScore(exprs.head, w), "scala_udf")
-    call_function(name, text)
-  }
+      w: org.apache.spark.broadcast.Broadcast[Array[Int]]): Column =
+    Cols.of(FastTextScore(Cols.expr(text), w))
 
   // One broadcast per application (the Bpe.bigVocabMemo discipline:
   // keyed by applicationId, not the session object).
   private val weightsMemo = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.broadcast.Broadcast[Array[Int]]]
 
-  private def weightsBc(spark: SparkSession) =
+  private[graft] def weightsBc(spark: SparkSession) =
     weightsMemo.getOrElseUpdate(spark.sparkContext.applicationId,
       spark.sparkContext.broadcast(buildWeights()))
 
-  def register(spark: SparkSession): Unit = {
-    val bc = weightsBc(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fasttext_score", exprs => FastTextScore(exprs.head, bc), "scala_udf")
-  }
-
   /** Score pre-normalized text (pass [[TextFunctions.normText]] output). */
-  def score(text: Column): Column = {
-    register(SparkSession.active)
-    call_function("fasttext_score", text)
-  }
+  def score(text: Column): Column = scoreWith(text, weightsBc(SparkSession.active))
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Cols
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.SparkSession
 
 /** Custom Catalyst expressions for the hash-sketch operators Spark lacks as
   * built-ins (SURVEY.md §7 "custom Expression beats UDF"): SimHash and
@@ -513,10 +511,10 @@ object HashExpressions {
       extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
     // Children must already be LONG: `AbstractDataType` (and so
     // ExpectsInputTypes' inputTypes) is private[sql] on this Spark build, so
-    // implicit coercion can't be declared here. Instead every registration
-    // site wraps the arguments in Cast(_, LongType) (see `register` below and
-    // GraftExtensions), keeping interpreted eval and codegen consistent for
-    // integer-literal SQL arguments.
+    // implicit coercion can't be declared here. Instead [[interleaveExpr]],
+    // the one builder, wraps the arguments in Cast(_, LongType), keeping
+    // interpreted eval and codegen consistent for integer-literal SQL
+    // arguments.
     override def dataType: DataType = LongType
     override def prettyName: String = "interleave_bits"
 
@@ -572,114 +570,42 @@ object HashExpressions {
       copy(child = c)
   }
 
-  // Registry-routed like every other expression here, but through ONE
-  // fixed registration: the filter bytes travel as a BINARY literal
-  // argument the builder evaluates at analysis time. A per-filter closure
-  // registration would leak each (up to maxFilterBytes) byte array into
-  // sessionState.functionRegistry forever; a literal lives and dies with
-  // the plan that carries it.
-  def bloomContainsLong(key: Column, bloomData: Array[Byte]): Column = {
-    val spark = SparkSession.active
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains_long",
-      exprs => BloomContainsLong(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Array[Byte]]),
-      "scala_udf")
-    org.apache.spark.sql.functions.call_function(
-      "bloom_contains_long", key, org.apache.spark.sql.functions.lit(bloomData))
-  }
-
-  /** Register SQL-callable forms on a session; `Column` accessors below go
-    * through the registry so they work on any Spark build without relying on
-    * non-public Column constructors.
+  /** The filter bytes live in the expression, so they live and die with
+    * the plan that carries them.
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    VectorExpressions.register(spark)
-    def intArg(exprs: Seq[Expression], i: Int): Int =
-      exprs(i).eval(InternalRow.empty).asInstanceOf[Int]
-    reg.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignature(exprs.head, intArg(exprs, 1), intArg(exprs, 2)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "ascii_sum", exprs => AsciiSum(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "interleave_bits",
-      exprs => InterleaveBits(
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(0), LongType),
-        org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), LongType)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "byte_stride",
-      exprs => ByteStride(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "winnow_fingerprints",
-      exprs => WinnowFingerprints(exprs.head,
-        exprs(1).eval(InternalRow.empty).asInstanceOf[Int],
-        exprs(2).eval(InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_bands",
-      exprs => MinHashBandHashes(exprs.head,
-        intArg(exprs, 1), intArg(exprs, 2), intArg(exprs, 3)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs.head, intArg(exprs, 1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hyperplane_lsh",
-      exprs => {
-        val bits = exprs(1).eval(InternalRow.empty).asInstanceOf[Int]
-        val seed = exprs(2).eval(InternalRow.empty) match {
-          case i: Int => i.toLong
-          case l: Long => l
-        }
-        HyperplaneLsh(exprs.head, bits, seed)
-      },
-      "scala_udf")
-  }
+  def bloomContainsLong(key: Column, bloomData: Array[Byte]): Column =
+    Cols.of(BloomContainsLong(Cols.expr(key), bloomData))
 
-  def simhash64(tokens: Column): Column = call_function("simhash64", tokens)
+  /** Arguments are cast to LONG here, the one builder both the Column
+    * accessor and the SQL name use (see [[InterleaveBits]]).
+    */
+  def interleaveExpr(x: Expression, y: Expression): Expression =
+    InterleaveBits(Cast(x, LongType), Cast(y, LongType))
 
-  def asciiSum(text: Column): Column = call_function("ascii_sum", text)
+  def simhash64(tokens: Column): Column = Cols.of(SimHash64(Cols.expr(tokens)))
 
-  def nfcNormalize(text: Column): Column = call_function("nfc_normalize", text)
+  def asciiSum(text: Column): Column = Cols.of(AsciiSum(Cols.expr(text)))
+
+  def nfcNormalize(text: Column): Column = Cols.of(NfcNormalize(Cols.expr(text)))
 
   def interleaveBits(x: Column, y: Column): Column =
-    call_function("interleave_bits", x.cast("long"), y.cast("long"))
+    Cols.of(interleaveExpr(Cols.expr(x), Cols.expr(y)))
 
   def byteStride(data: Column, n: Int): Column =
-    call_function("byte_stride", data, org.apache.spark.sql.functions.lit(n))
+    Cols.of(ByteStride(Cols.expr(data), n))
 
   def winnowFingerprints(text: Column, k: Int = 5, w: Int = 4): Column =
-    call_function("winnow_fingerprints", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
+    Cols.of(WinnowFingerprints(Cols.expr(text), k, w))
 
   def minhashSignature(tokens: Column, shingleLen: Int, k: Int): Column =
-    call_function("minhash_signature", tokens,
-      org.apache.spark.sql.functions.lit(shingleLen),
-      org.apache.spark.sql.functions.lit(k))
+    Cols.of(MinHashSignature(Cols.expr(tokens), shingleLen, k))
 
   def shingleHashes(tokens: Column, shingleLen: Int): Column =
-    call_function("shingle_hashes", tokens,
-      org.apache.spark.sql.functions.lit(shingleLen))
+    Cols.of(ShingleHashes(Cols.expr(tokens), shingleLen))
 
   def minhashBands(tokens: Column, shingleLen: Int, k: Int, r: Int): Column =
-    call_function("minhash_bands", tokens,
-      org.apache.spark.sql.functions.lit(shingleLen),
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(r))
+    Cols.of(MinHashBandHashes(Cols.expr(tokens), shingleLen, k, r))
 
   def hyperplaneLsh(vec: Column, nBits: Int, seed: Long): Column =
-    call_function("hyperplane_lsh", vec,
-      org.apache.spark.sql.functions.lit(nBits), org.apache.spark.sql.functions.lit(seed))
+    Cols.of(HyperplaneLsh(Cols.expr(vec), nBits, seed))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.Cols
 import org.apache.spark.sql.types._
 
 /** Native dot-product expression for embedding arrays.
@@ -70,8 +69,8 @@ object VectorExpressions {
                        aF: Boolean, bF: Boolean): java.lang.Double
 
     // Element kind per side: Some(true)=float, Some(false)=double, None =
-    // not directly foldable. Int/long/NULL arguments are handled at the
-    // REGISTRATION sites by wrapping in Cast(_, array<double>) — same
+    // not directly foldable. Int/long/NULL SQL arguments are handled by the
+    // SQL builders (`dotExpr`, `l2sqExpr`) wrapping in Cast(_, array<double>) — same
     // pattern as InterleaveBits, since declaring ExpectsInputTypes is not
     // possible on this Spark build (AbstractDataType is private[sql]).
     private def kind(e: Expression): Option[Boolean] = e.dataType match {
@@ -84,8 +83,8 @@ object VectorExpressions {
     private def fail(e: Expression): Nothing =
       throw new IllegalArgumentException(
         s"$prettyName expects array<float> or array<double> children, got " +
-          s"${e.dataType.simpleString}; cast the argument (SQL registration " +
-          "sites do this automatically)")
+          s"${e.dataType.simpleString}; cast the argument (SQL calls do this " +
+          "automatically)")
 
     override def dataType: DataType = DoubleType
     // The kernel returns null for length mismatch / null elements even when
@@ -106,14 +105,11 @@ object VectorExpressions {
       })
   }
 
-  /** Registration-site coercion: float/double arrays pass through; every
+  /** SQL-builder coercion: float/double arrays pass through; every
     * other argument (array<int>, array<long>, NULL literals, …) is cast to
     * array<double>, preserving the HOF form's semantics — int arrays fold
-    * numerically, NULL stays NULL. Unresolved arguments (SQL analysis in
-    * progress) defer to a cast too, which is a no-op once resolved to a
-    * float/double array... so only apply it when the type is KNOWN to need
-    * it; unresolved stays bare and resolves via the expression's own
-    * lazy check.
+    * numerically, NULL stays NULL. An argument whose type is not known
+    * yet stays bare and meets the expression's own lazy check.
     */
   private def coerce(e: Expression): Expression = {
     val needsCast =
@@ -225,8 +221,9 @@ object VectorExpressions {
       copy(child = c)
   }
 
-  /** Coerced constructors — the single builder both registration paths
-    * (session extension injection and temp-function registration) share.
+  /** Coerced constructors for the SQL names in
+    * [[graft.engine.GraftExtensions]]: the analyzer hands them resolved
+    * children, so [[coerce]] sees the real argument types.
     */
   def dotExpr(a: Expression, b: Expression): Expression =
     DotProduct(coerce(a), coerce(b))
@@ -235,58 +232,17 @@ object VectorExpressions {
   def signProjectExpr(a: Expression, outDims: Int, seed: Long): Expression =
     SignProject(coerce(a), outDims, seed)
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", exprs => dotExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_f", exprs => l2sqExpr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_project", exprs => {
-        val row = org.apache.spark.sql.catalyst.InternalRow.empty
-        // SQL integer literals may arrive as INT or BIGINT — accept both
-        // for dims (as for seed), failing with the argument name rather
-        // than a bare ClassCastException at analysis.
-        val dims = exprs(1).eval(row) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"sign_project: dims must be an integer literal, got $other")
-        }
-        val seed = exprs(2).eval(row) match {
-          case i: Int => i.toLong
-          case l: Long => l
-          case other => throw new IllegalArgumentException(
-            s"sign_project: seed must be an integer literal, got $other")
-        }
-        signProjectExpr(exprs(0), dims, seed)
-      }, "scala_udf")
-  }
+  // Column accessors, built directly so VectorFunctions.dot/cosine and
+  // every Similarity operator work on any session. A Column's expression
+  // has no type until analysis, so nothing is coerced here: pass
+  // float/double arrays (embeddings are array<float>); other element
+  // types fail with the kernels' "cast the argument" error.
+  def dotF(a: Column, b: Column): Column =
+    Cols.of(DotProduct(Cols.expr(a), Cols.expr(b)))
 
-  // The Column API resolves through the function registry (public-API-only
-  // expression construction — same rationale as HashExpressions.register).
-  // Sessions built via GraftSession get the functions injected; for any
-  // OTHER session, registering idempotently on the active one keeps
-  // VectorFunctions.dot/cosine and every Similarity operator self-contained
-  // — before round 6 these were registry-free HOF expressions, and that
-  // zero-setup contract must survive the codegen swap.
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
+  def l2sqF(a: Column, b: Column): Column =
+    Cols.of(L2Squared(Cols.expr(a), Cols.expr(b)))
 
-  def dotF(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("dot_f", a, b)
-  }
-
-  def l2sqF(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("l2sq_f", a, b)
-  }
-
-  def signProjectF(vec: Column, outDims: Int, seed: Long): Column = {
-    ensureRegistered()
-    call_function("sign_project", vec,
-      org.apache.spark.sql.functions.lit(outDims),
-      org.apache.spark.sql.functions.lit(seed))
-  }
+  def signProjectF(vec: Column, outDims: Int, seed: Long): Column =
+    Cols.of(SignProject(Cols.expr(vec), outDims, seed))
 }

@@ -73,7 +73,6 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     require(avgChunkTokens >= 2,
       s"avgChunkTokens=$avgChunkTokens must be >= 2")
-    graft.functions.HashExpressions.register(df.sparkSession)
     val toksPos = df
       .select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
       .select(col("id"), posexplode(col("__toks")).as(Seq("pos", "tok")))

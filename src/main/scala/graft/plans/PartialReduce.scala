@@ -32,7 +32,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 case class PartialReduce(session: SparkSession) extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan = {
-    val enabled = session.conf.get("spark.graft.partialReduce", "false").toBoolean
+    val enabled = graft.engine.GraftSession.boolConf(session, "spark.graft.partialReduce")
+      .getOrElse(false)
     if (!enabled) plan
     else plan.transformUp {
       case ex: ShuffleExchangeExec => ex.child match {

@@ -32,10 +32,6 @@ object Pipeline {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
-  // Alias kept from the blanket-fan-out experiment (media-plant call
-  // sites; plants fan out internally via Multimodal.fanOutIds).
-  private def docsNarrow(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
   // Fanned loader (r18 optimization round) for the queries where ONE
   // expensive narrow pass dominates and the single-split scan pinned it
   // to one task (Tables.fanOutIfNarrow; size-derived, no-op at scale).
@@ -64,14 +60,19 @@ object Pipeline {
   // would serve one bench iteration's rows to the next. Signature rows
   // are slim (id + 4 band words + flags); the parsed-WARC call sites
   // (p142/p145/p146/p151 — the 3-consumer plant+parse class) checkpoint
-  // payload-bearing rows, bounded by the planted corpus slice exactly
+  // payload-bearing rows, bounded in SIZE by the planted corpus slice
   // like the sibling queries' MEMORY_AND_DISK persists (p143/p157/p114).
-  // Applied per query where the interleaved ConfAb A/B
-  // (spark.graft.capstone.ckpt flip) measured a win; blocks are
-  // invocation-scoped, reclaimed by the ContextCleaner.
+  // It is NOT fault-equivalent to them: localCheckpoint truncates
+  // lineage, so a block lives only on the executor that computed it,
+  // and losing that executor fails the query with
+  // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND where a persist would recompute
+  // (reproduced in local-cluster[2,1,1024]). ROADMAP item 2 replaces
+  // this with a lineage-keeping shared copy. Applied per query where the
+  // interleaved ConfAb A/B (spark.graft.capstone.ckpt flip) measured a
+  // win; blocks are invocation-scoped, reclaimed by the ContextCleaner.
   private def ckSigs(s: SparkSession, df: DataFrame): DataFrame =
-    if (s.conf.getOption("spark.graft.capstone.ckpt")
-          .forall(_.trim.equalsIgnoreCase("true"))) df.localCheckpoint(false)
+    if (graft.engine.GraftSession.boolConf(s, "spark.graft.capstone.ckpt")
+          .getOrElse(true)) df.localCheckpoint(false)
     else df
 
   /** Shared p30 parameters — the Scala query and the SQL oracle derive
@@ -301,7 +302,7 @@ object Pipeline {
 
     // ---- multimodal binary plumbing: byte length + content hash ----
     "p06_multimodal_bytes" -> ((s, dir) => {
-      Multimodal.fromDocuments(docsNarrow(s, dir))
+      Multimodal.fromDocuments(docs(s, dir))
         .select(col("media_id"), col("modality"),
           length(col("data")).as("byte_len"),
           md5(col("data")).as("content_md5"),
@@ -332,7 +333,6 @@ object Pipeline {
     // (64-bit sigs; near-dup docs share token distributions). The pair
     // list itself is exact, so DuckDB derives every output column. ----
     "p09_simhash_sigs" -> ((s, dir) => {
-      HashExpressions.register(s)
       // docsFanned KEPT (r19, re-adjudicated with data): the r18 verdict
       // flagged this call as an unrestored fan-out loser (driver 0.80×,
       // builder detail 1.48× slower) and r19 duly applied the revert —
@@ -367,7 +367,6 @@ object Pipeline {
     // histogram is computed (groupBy bucket), then checked — every vector
     // lands in exactly one bucket and every bucket id is in [0, 2^nBits). ----
     "p11_embedding_lsh_buckets" -> ((s, dir) => {
-      HashExpressions.register(s)
       Similarity.bucketed(emb(s, dir), nBits = 8)
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"))
@@ -403,7 +402,6 @@ object Pipeline {
     // winnowed fingerprint sets — same oracle-derivable pair-list pattern
     // as p09 (measured overlap on this corpus: 0.87-1.0). ----
     "p15_winnow_fingerprints" -> ((s, dir) => {
-      HashExpressions.register(s)
       // The pair list is materialized ONCE (localCheckpoint; output is
       // |pairs| rows — tiny next to the corpus): it feeds three consumers
       // below, and without materialization each re-evaluates the whole
@@ -437,7 +435,7 @@ object Pipeline {
     // derivable from payload length, so the plumbing is oracle-gated. ----
     "p16_frame_sampling" -> ((s, dir) => {
       Multimodal.sampleFrames(
-        Multimodal.fromDocuments(docsNarrow(s, dir)), frameBytes = 100, everyN = 2)
+        Multimodal.fromDocuments(docs(s, dir)), frameBytes = 100, everyN = 2)
         .groupBy(col("media_id"))
         .agg(count(lit(1)).as("n_frames"),
              sum(length(col("frame"))).as("total_frame_bytes"))
@@ -619,7 +617,6 @@ object Pipeline {
     // PLANTED (e + U+0301, i + U+0308) and must compose; char counts
     // before/after pin the contraction ----
     "p31_unicode_normalize" -> ((s, dir) => {
-      HashExpressions.register(s)
       // Decomposed on purpose: 'e' + U+0301, 'i' + U+0308 — NFC must
       // contract them to the precomposed forms.
       val enriched = concat(col("text"), lit(" cafe\u0301 nai\u0308ve"))
@@ -944,7 +941,7 @@ object Pipeline {
     // from the planted rule without owning a codec. `decoded` pins that
     // the codec path (not the stub fallback) produced every row. ----
     "p58_image_decode" -> ((s, dir) => {
-      Multimodal.decodeImageFeatures(Multimodal.plantPngs(docsNarrow(s, dir)))
+      Multimodal.decodeImageFeatures(Multimodal.plantPngs(docs(s, dir)))
         .select(col("media_id"), col("width"), col("height"),
           col("n_channels"), col("pixel_sum"), col("decoded"))
         .orderBy(col("media_id"))
@@ -956,7 +953,7 @@ object Pipeline {
     // encode->decode->resample->re-encode->decode chain is value-checked. ----
     "p59_image_resize" -> ((s, dir) => {
       Multimodal.decodeImageFeatures(
-        Multimodal.resizePooled(Multimodal.plantPngs(docsNarrow(s, dir)), 2))
+        Multimodal.resizePooled(Multimodal.plantPngs(docs(s, dir)), 2))
         .select(col("media_id"), col("width"), col("height"),
           col("pixel_sum"), col("decoded"))
         .orderBy(col("media_id"))
@@ -968,7 +965,7 @@ object Pipeline {
     // sum from the planted rule without owning a codec. `decoded` pins the
     // codec path produced every row. ----
     "p60_audio_decode" -> ((s, dir) => {
-      Multimodal.decodeAudioFeatures(Multimodal.plantWavs(docsNarrow(s, dir)))
+      Multimodal.decodeAudioFeatures(Multimodal.plantWavs(docs(s, dir)))
         .select(col("media_id"), col("sample_rate"), col("channels"),
           col("n_frames"), col("amp_sum"), col("decoded"))
         .orderBy(col("media_id"))
@@ -984,7 +981,7 @@ object Pipeline {
     // every feature closed-form, so a silent codec regression in EITHER
     // decoder breaks this row. ----
     "p61_multimodal_funnel" -> ((s, dir) => {
-      val d = docsNarrow(s, dir)
+      val d = docs(s, dir)
       val img = Multimodal.decodeImageFeatures(
           Multimodal.plantPngs(d.filter(col("doc_id") % 3 === 0)))
         .select(col("media_id"), lit("image").as("modality"),
@@ -1013,7 +1010,7 @@ object Pipeline {
     // counts, dimensions AND per-frame pixel sums from the planted rule —
     // a full differential check through a real multi-frame codec. ----
     "p62_video_frames" -> ((s, dir) => {
-      Multimodal.sampleVideoFrames(Multimodal.plantGifs(docsNarrow(s, dir)), 2)
+      Multimodal.sampleVideoFrames(Multimodal.plantGifs(docs(s, dir)), 2)
         .select(col("media_id"), col("frame_idx"), col("n_frames"),
           col("width"), col("height"), col("pixel_sum"), col("decoded"))
         .orderBy(col("media_id"), col("frame_idx"))
@@ -1027,7 +1024,7 @@ object Pipeline {
     // sequence re-encode -> decode. ----
     "p63_video_resize" -> ((s, dir) => {
       Multimodal.sampleVideoFrames(
-          Multimodal.resizeVideoPooled(Multimodal.plantGifs(docsNarrow(s, dir)), 2), 1)
+          Multimodal.resizeVideoPooled(Multimodal.plantGifs(docs(s, dir)), 2), 1)
         .select(col("media_id"), col("frame_idx"), col("n_frames"),
           col("width"), col("height"), col("pixel_sum"), col("decoded"))
         .orderBy(col("media_id"), col("frame_idx"))
@@ -1038,7 +1035,7 @@ object Pipeline {
     // frames differ by a constant per-pixel phase shift, so the oracle
     // recomputes every delta closed-form. ----
     "p64_video_motion" -> ((s, dir) => {
-      Multimodal.videoMotionFeatures(Multimodal.plantGifs(docsNarrow(s, dir)))
+      Multimodal.videoMotionFeatures(Multimodal.plantGifs(docs(s, dir)))
         .select(col("media_id"), col("frame_idx"), col("n_frames"),
           col("motion_sum"), col("decoded"))
         .orderBy(col("media_id"), col("frame_idx"))
@@ -1050,7 +1047,7 @@ object Pipeline {
     // The oracle recomputes every output sample closed-form. ----
     "p65_audio_resample" -> ((s, dir) => {
       Multimodal.decodeAudioFeatures(
-          Multimodal.resampleAudioDecimated(Multimodal.plantWavs(docsNarrow(s, dir)), 2))
+          Multimodal.resampleAudioDecimated(Multimodal.plantWavs(docs(s, dir)), 2))
         .select(col("media_id"), col("sample_rate"), col("channels"),
           col("n_frames"), col("amp_sum"), col("decoded"))
         .orderBy(col("media_id"))
@@ -1071,7 +1068,7 @@ object Pipeline {
       // tools/mutation_check.sh asserts the gate catches.
       val amp =
         if (mutateGate) col("amp_sum").cast("double") else col("amp_sum")
-      Multimodal.decodeAudioFeatures(Multimodal.plantWavs16(docsNarrow(s, dir)))
+      Multimodal.decodeAudioFeatures(Multimodal.plantWavs16(docs(s, dir)))
         .select(col("media_id"), col("sample_rate"), col("channels"),
           col("n_frames"), amp.as("amp_sum"), col("decoded"))
         .orderBy(col("media_id"))
@@ -1087,7 +1084,7 @@ object Pipeline {
     // chain is value-checked. ----
     "p67_audio16_resample" -> ((s, dir) => {
       Multimodal.decodeAudioFeatures(
-          Multimodal.resampleAudioDecimated(Multimodal.plantWavs16(docsNarrow(s, dir)), 2))
+          Multimodal.resampleAudioDecimated(Multimodal.plantWavs16(docs(s, dir)), 2))
         .select(col("media_id"), col("sample_rate"), col("channels"),
           col("n_frames"), col("amp_sum"), col("decoded"))
         .orderBy(col("media_id"))
@@ -1102,7 +1099,7 @@ object Pipeline {
     // duration_ms (incl. the timescale division), track count and the
     // per-track codec fourccs closed-form. ----
     "p68_mp4_meta" -> ((s, dir) => {
-      Mp4Meta.parseMp4Meta(Mp4Meta.plantMp4s(docsNarrow(s, dir)))
+      Mp4Meta.parseMp4Meta(Mp4Meta.plantMp4s(docs(s, dir)))
         .select(col("media_id"), col("duration_ms"), col("timescale"),
           col("n_tracks"), col("codecs"), col("parsed"))
         .orderBy(col("media_id"))
@@ -1117,7 +1114,7 @@ object Pipeline {
     // kept) reaches the aggregation. Both branches recomputed closed-form
     // by the oracle. ----
     "p69_container_router" -> ((s, dir) => {
-      val d = docsNarrow(s, dir)
+      val d = docs(s, dir)
       val gifStats = Multimodal
         .sampleVideoFrames(
           Multimodal.plantGifs(d.filter(col("doc_id") % 2 === 0)), 1)
@@ -1227,7 +1224,7 @@ object Pipeline {
     // side round-trips genuine PNG bytes. Narrow decode stage; only
     // (id, 4 small words) leaves it. ----
     "p74_image_dhash" -> ((s, dir) => {
-      ImageHash.dhashSignatures(Multimodal.plantPngs(docsNarrow(s, dir)))
+      ImageHash.dhashSignatures(Multimodal.plantPngs(docs(s, dir)))
         .select(col("media_id").as("id"), col("width"), col("height"),
           col("b0"), col("b1"), col("b2"), col("b3"))
         .orderBy(col("id"))
@@ -1246,7 +1243,7 @@ object Pipeline {
     // natural phase-twin pairs at sf0.1 — fixture artifact, not
     // operator workload (see plantPngsFp scaladoc). ----
     "p75_image_neardup_pairs" -> ((s, dir) => {
-      val base = Multimodal.plantPngsFp(docsNarrow(s, dir))
+      val base = Multimodal.plantPngsFp(docs(s, dir))
       val copies = Multimodal
         .resizePooled(base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
@@ -1268,7 +1265,7 @@ object Pipeline {
     // framing bytes on the Spark side, zero WARC code on the oracle side.
     // Narrow parse; payloads never shuffle. ----
     "p76_warc_records" -> ((s, dir) => {
-      Warc.parseWarc(Warc.plantWarcs(docsNarrow(s, dir)))
+      Warc.parseWarc(Warc.plantWarcs(docs(s, dir)))
         .select(col("media_id").as("id"), col("rec_idx"), col("warc_type"),
           col("target_uri"), col("content_length"),
           md5(col("payload")).as("payload_md5"), col("ok"))
@@ -1283,7 +1280,7 @@ object Pipeline {
     // parse/extract stages; only slim columns shuffle. ----
     "p77_warc_funnel" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val recs = Warc.parseWarc(Warc.plantWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .select(col("media_id").as("id"), col("target_uri").as("url"),
           decode(col("payload"), "UTF-8").as("html"))
@@ -1322,7 +1319,6 @@ object Pipeline {
     // its bag. Two-stage select keeps the encode kernel at once-per-row.
     // Narrow, shuffle-free, whole-stage codegen. ----
     "p78_bpe_encode" -> ((s, dir) => {
-      graft.functions.Bpe.register(s)
       docs(s, dir)
         .select(col("doc_id"),
           graft.functions.Bpe.bpeEncode(TF.normText(col("text"))).as("__ids"))
@@ -1343,7 +1339,6 @@ object Pipeline {
     // two-phase prefix-sum packer as p21, parameterized by the BPE weight
     // column. ----
     "p79_bpe_packing" -> ((s, dir) => {
-      graft.functions.Bpe.register(s)
       val withBpe = docs(s, dir).select(col("doc_id"),
         graft.functions.Bpe.bpeCount(TF.normText(col("text"))).as("n_bpe"))
       Sampling.packByBudget(withBpe, "doc_id", "n_bpe", budget = 5000L)
@@ -1376,7 +1371,7 @@ object Pipeline {
     // pairs alone start: a re-encoded duplicate CLUSTER keeps exactly
     // one image. Oracle: all-pairs hamming graph + recursive-CTE CC. ----
     "p81_image_dedup_survivors" -> ((s, dir) => {
-      val base = Multimodal.plantPngsFp(docsNarrow(s, dir))
+      val base = Multimodal.plantPngsFp(docs(s, dir))
       val copies = Multimodal
         .resizePooled(base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
@@ -1419,7 +1414,7 @@ object Pipeline {
     // nothing. Payloads never shuffle; pair generation moves
     // O(clips x 4) slim rows. ----
     "p83_audio_neardup_pairs" -> ((s, dir) => {
-      val base = Multimodal.plantWavsFp(docsNarrow(s, dir))
+      val base = Multimodal.plantWavsFp(docs(s, dir))
       val copies = Multimodal
         .resampleAudioDecimated(base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
@@ -1438,7 +1433,7 @@ object Pipeline {
     // exactly one clip. Oracle: all-pairs hamming graph +
     // recursive-CTE CC. ----
     "p84_audio_dedup_survivors" -> ((s, dir) => {
-      val base = Multimodal.plantWavsFp(docsNarrow(s, dir))
+      val base = Multimodal.plantWavsFp(docs(s, dir))
       val copies = Multimodal
         .resampleAudioDecimated(base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
@@ -1463,7 +1458,7 @@ object Pipeline {
     // the closed-form extraction metrics. Payloads stay in the narrow
     // parse/decode stages; only slim columns shuffle. ----
     "p85_warc_multimodal" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantMixedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantMixedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -1531,7 +1526,6 @@ object Pipeline {
     // recursive walk; the order-sensitive positional checksum again
     // makes the token sequence (not just its bag) the thing compared. ----
     "p87_bpe_big_vocab" -> ((s, dir) => {
-      graft.functions.Bpe.registerBig(s)
       docs(s, dir)
         .select(col("doc_id"),
           graft.functions.Bpe.bpeEncodeBig(TF.normText(col("text")))
@@ -1560,7 +1554,7 @@ object Pipeline {
     // pairs that dominate a PAIR query's output — fixture artifact, not
     // operator workload (see plantPngsFp scaladoc). ----
     "p88_image_incremental_neardup" -> ((s, dir) => {
-      val d = docsNarrow(s, dir)
+      val d = docs(s, dir)
       val corpus = ImageHash.dhashSignatures(Multimodal.plantPngsFp(d))
       val copies = Multimodal.resizePooled(
           Multimodal.plantPngsFp(d.filter(col("doc_id") % 7 === 0)), 1)
@@ -1587,7 +1581,7 @@ object Pipeline {
     // plantGifsFp (shape-varying pixel rule — the phase-twin lesson
     // applied from day one; see plantGifsFp scaladoc). ----
     "p89_video_neardup_pairs" -> ((s, dir) => {
-      val base = Multimodal.plantGifsFp(docsNarrow(s, dir))
+      val base = Multimodal.plantGifsFp(docs(s, dir))
       val copies = Multimodal.resizeVideoPooled(
           base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
@@ -1606,7 +1600,7 @@ object Pipeline {
     // Oracle: closed-form majority-fold words -> all-pairs hamming
     // graph -> recursive-CTE CC. ----
     "p90_video_dedup_survivors" -> ((s, dir) => {
-      val base = Multimodal.plantGifsFp(docsNarrow(s, dir))
+      val base = Multimodal.plantGifsFp(docs(s, dir))
       val copies = Multimodal.resizeVideoPooled(
           base.filter(col("media_id") % 5 === 0), 1)
         .withColumn("media_id", col("media_id") + CopyIdOffset)
@@ -1641,7 +1635,7 @@ object Pipeline {
       // re-executed per branch (at 100 TB you'd land the parsed records
       // once for the same reason; the eager sink write below lets the
       // cache release before the query returns).
-      val recs = Warc.parseWarc(Warc.plantMixedWarcsFp(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantMixedWarcsFp(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -1735,7 +1729,6 @@ object Pipeline {
     // a wrong broadcast entry, hash step, or bigram combine breaks the
     // per-doc score exactly. ----
     "p93_quality_classifier" -> ((s, dir) => {
-      graft.functions.FastText.register(s)
       val toks = filter(split(TF.normText(col("text")), " "),
         t => length(t) > 0)
       docs(s, dir)
@@ -1754,7 +1747,6 @@ object Pipeline {
     // classifier gate, reported as per-stage survivor counts. The
     // standard curation cascade ends with exactly this model stage. ----
     "p94_classifier_funnel" -> ((s, dir) => {
-      graft.functions.FastText.register(s)
       val scored = docs(s, dir).select(
         size(filter(split(TF.normText(col("text")), " "),
           t => length(t) > 0)).as("n_toks"),
@@ -1831,7 +1823,7 @@ object Pipeline {
     // included, so a window-indexing bug breaks per-row equality. ----
     "p97_audio_window_sigs" -> ((s, dir) => {
       AudioHash.windowFingerprints(
-          Multimodal.plantWavsSeg(docsNarrow(s, dir)), win = 130, hop = 26)
+          Multimodal.plantWavsSeg(docs(s, dir)), win = 130, hop = 26)
         .select(col("media_id"), col("n_frames"), col("n_wins"),
           col("win_idx"), col("w0"), col("w1"), col("w2"), col("w3"))
         .orderBy(col("media_id"), col("win_idx"))
@@ -1852,7 +1844,7 @@ object Pipeline {
       // production callers keep the default cap).
       AudioHash.containmentPairs(
           AudioHash.windowFingerprints(
-            Multimodal.plantWavsSeg(docsNarrow(s, dir)), win = 130, hop = 26),
+            Multimodal.plantWavsSeg(docs(s, dir)), win = 130, hop = 26),
           maxBucketSize = Long.MaxValue)
         .orderBy(col("inner_id"), col("outer_id"), col("offset_wins"))
     }),
@@ -1864,7 +1856,7 @@ object Pipeline {
     // band words recomputed closed-form in SQL, absolute-frame pixel
     // rule included. ----
     "p99_video_frame_sigs" -> ((s, dir) => {
-      VideoHash.frameHashes(Multimodal.plantGifsSeg(docsNarrow(s, dir)))
+      VideoHash.frameHashes(Multimodal.plantGifsSeg(docs(s, dir)))
         .select(col("media_id"), col("n_frames"), col("frame_idx"),
           col("w0"), col("w1"), col("w2"), col("w3"))
         .orderBy(col("media_id"), col("frame_idx"))
@@ -1880,7 +1872,7 @@ object Pipeline {
     "p100_video_containment" -> ((s, dir) => {
       // maxBucketSize explicit — same rationale as p98.
       VideoHash.containmentPairs(
-          VideoHash.frameHashes(Multimodal.plantGifsSeg(docsNarrow(s, dir))),
+          VideoHash.frameHashes(Multimodal.plantGifsSeg(docs(s, dir))),
           maxBucketSize = Long.MaxValue)
         .orderBy(col("inner_id"), col("outer_id"), col("offset_frames"))
     }),
@@ -1916,7 +1908,7 @@ object Pipeline {
     // majority-fold word CTEs under the (id/10)*10 copy rule +
     // recursive-CTE CC, zero knowledge of WARC framing or routing. ----
     "p102_crawl_video_dedup" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantVideoWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantVideoWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -1982,7 +1974,6 @@ object Pipeline {
     // proves the last-mile export end to end: budgets, boundaries, and
     // the disk hop. Eager write at construction (p86 convention). ----
     "p104_shard_export" -> ((s, dir) => {
-      graft.functions.Bpe.registerBig(s)
       // Persist the token counts: packByBudget's two-phase prefix sum
       // evaluates its input twice (per-bucket totals, then the window
       // job) and the sink write a third time — without the cache the
@@ -2092,7 +2083,7 @@ object Pipeline {
     // addReferenceObj exactly like the planted-codebook kernels). ----
     "p108_kmeans_assign" -> ((s, dir) => {
       val m = kmModel(s, dir)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .select(col("vec_id"), dl.as("__dl"))
@@ -2167,7 +2158,7 @@ object Pipeline {
     // slice derivation + the inner-side drop rule. ----
     "p112_containment_survivors" -> ((s, dir) => {
       val base = AudioHash.windowFingerprints(
-          Multimodal.plantWavsSeg(docsNarrow(s, dir)), win = 130, hop = 26)
+          Multimodal.plantWavsSeg(docs(s, dir)), win = 130, hop = 26)
         .filter(col("decoded") && col("win_idx").isNotNull)
         .select(col("media_id"), col("win_idx"), col("n_wins"), col("whash"))
       val sub = base
@@ -2200,7 +2191,7 @@ object Pipeline {
     // direction). ----
     "p113_incremental_containment" -> ((s, dir) => {
       val base = AudioHash.windowFingerprints(
-          Multimodal.plantWavsSeg(docsNarrow(s, dir)), win = 130, hop = 26)
+          Multimodal.plantWavsSeg(docs(s, dir)), win = 130, hop = 26)
       val slices = base
         .filter(col("decoded") && col("media_id") % 7 === 1 &&
           col("n_wins") >= 3 &&
@@ -2230,7 +2221,7 @@ object Pipeline {
     // or routing — including the temporal majority-fold video CTEs. ----
     "p114_crawl_capstone_full" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val recs = Warc.parseWarc(Warc.plantFullWarcsFp(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantFullWarcsFp(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -2295,7 +2286,7 @@ object Pipeline {
       val FT = graft.functions.FastText
       docs(s, dir)
         .select(when(col("lang") === "en", 1).otherwise(0).as("p"),
-          explode(FT.features(TF.normText(col("text")), s)).as("feat"))
+          explode(FT.features(TF.normText(col("text")))).as("feat"))
         .groupBy(col("feat"))
         .agg(sum(col("p")).as("n_pos"), sum(lit(1) - col("p")).as("n_neg"))
         .select(col("feat").cast("bigint").as("feat"),
@@ -2315,7 +2306,7 @@ object Pipeline {
       val bc = ftModel(s, dir)
       docs(s, dir)
         .select(col("doc_id"),
-          FT.scoreWith(TF.normText(col("text")), bc, s).as("score"))
+          FT.scoreWith(TF.normText(col("text")), bc).as("score"))
         .select(col("doc_id"), col("score"), (col("score") > 0).as("kept"))
         .orderBy(col("doc_id"))
     }),
@@ -2355,11 +2346,11 @@ object Pipeline {
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val e = if (mo.codebook.isEmpty) base.limit(0) else base
       val codes = e.select(col("vec_id"),
-        P.encodeWith(col("embedding"), mo.bc, s)
+        P.encodeWith(col("embedding"), mo.bc)
           .getField("code").as("pq_code"))
       val qs = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), mo.bc, s).as("lut"))
+          P.lutWith(col("embedding"), mo.bc).as("lut"))
       val adc = (0 until P.M).map { m =>
         element_at(col("lut"),
           (lit(m * P.K + 1) + shiftright(col("pq_code"), 4 * m)
@@ -2438,7 +2429,7 @@ object Pipeline {
           concat(array(lit(0.5f)), slice(col("embedding"), 2, 63))
             .as("embedding"))
       val all = base.unionByName(exactCopies).unionByName(nearCopies)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       val assigned = all.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
       Similarity.semanticDedup(assigned, tau = 1.0)
@@ -2463,19 +2454,19 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       val corpusIdx = s.read
         .schema("vec_id BIGINT, cell INT, pq_code BIGINT")
         .parquet(p121Fixture(s, dir))
       val batchIdx = live.filter(col("vec_id") % 17 === 3)
         .select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq.bc).getField("code")
             .as("pq_code"))
       val index = corpusIdx.unionByName(batchIdx)
       val qs = live.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), pq.bc, s).as("lut"),
+          P.lutWith(col("embedding"), pq.bc).as("lut"),
           slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 4).as("probes"))
         .select(col("qid"), col("lut"), explode(col("probes")).as("probe"))
@@ -2512,7 +2503,7 @@ object Pipeline {
       val FT = graft.functions.FastText
       val scored = docs(s, dir)
         .select(col("doc_id"),
-          (FT.scoreWith(TF.normText(col("text")), ftModel(s, dir), s)
+          (FT.scoreWith(TF.normText(col("text")), ftModel(s, dir))
             + lit(1000000000L)).as("s2"))
       val thr = scored.agg(
         expr("sum(s2) div greatest(count(1), 1)").as("thr"))
@@ -2556,7 +2547,7 @@ object Pipeline {
     "p123_cluster_balanced_sample" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val m = kmModel(s, dir)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .select(col("vec_id"),
@@ -2612,10 +2603,10 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       live.select(
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"),
-          round(P.encodeWith(col("embedding"), pq.bc, s).getField("err"), 6)
+          round(P.encodeWith(col("embedding"), pq.bc).getField("err"), 6)
             .cast("decimal(38,6)").as("err"))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"),
@@ -2643,11 +2634,11 @@ object Pipeline {
       val res = residualFrame(s, dir)
       val live = if (rpq.codebook.isEmpty) res.limit(0) else res
       val codes = live.select(col("vec_id"), col("cell"),
-        P.encodeWith(col("resv"), rpq.bc, s).getField("code").as("pq_code"))
+        P.encodeWith(col("resv"), rpq.bc).getField("code").as("pq_code"))
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val eLive = if (rpq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       val qs = eLive.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("embedding"),
           slice(sort_array(transform(dl,
@@ -2659,7 +2650,7 @@ object Pipeline {
         .join(broadcast(kmCentroidsDf(s, km)), Seq("cell"))
         .select(col("qid"), col("cell"),
           P.lutWith(zip_with(col("embedding"), col("cv"),
-            (x, c) => (x.cast("double") - c).cast("float")), rpq.bc, s)
+            (x, c) => (x.cast("double") - c).cast("float")), rpq.bc)
             .as("lut"))
       val adc = (0 until P.M).map { m =>
         element_at(col("lut"),
@@ -2802,7 +2793,7 @@ object Pipeline {
           concat(array_repeat(lit(0.9f), 8), slice(col("embedding"), 9, 56))
             .as("embedding"))
       val batch = exactCopies.unionByName(nearCopies).unionByName(fresh)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       def assign(df: DataFrame): DataFrame =
         df.select(col("vec_id"), col("embedding"),
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
@@ -2824,7 +2815,7 @@ object Pipeline {
       val FT = graft.functions.FastText
       val scored = docs(s, dir)
         .select(col("doc_id"),
-          FT.scoreWith(TF.normText(col("text")), ftModel(s, dir), s)
+          FT.scoreWith(TF.normText(col("text")), ftModel(s, dir))
             .as("score"))
       scored
         .withColumn("rnk", row_number().over(
@@ -2889,7 +2880,7 @@ object Pipeline {
             .as("embedding"))
       val train = e.filter(col("vec_id") % 50 =!= 0)
         .unionByName(contamExact).unionByName(contamNear)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       def assign(df: DataFrame): DataFrame =
         df.select(col("vec_id"), col("embedding"),
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
@@ -2914,7 +2905,7 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .select(col("vec_id"), slice(col("embedding"), 1, 64).as("embedding"))
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       def assign(df: DataFrame): DataFrame =
         df.select(col("vec_id"), col("embedding"),
           (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
@@ -2970,7 +2961,7 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      val enc = P.encodeWith(col("embedding"), pq.bc, s)
+      val enc = P.encodeWith(col("embedding"), pq.bc)
       live.select(col("vec_id"),
           enc.getField("code").as("pq_code"),
           round(enc.getField("err"), 6).as("rec_err"))
@@ -2996,7 +2987,7 @@ object Pipeline {
           concat(array(lit(0.5f)), slice(col("embedding"), 2, 63))
             .as("embedding"))
       val all = base.unionByName(exactCopies).unionByName(nearCopies)
-      val dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      val dl = graft.functions.KMeans.dists(col("embedding"), m)
       val probed = all.select(col("vec_id"), col("embedding"),
         transform(slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 2),
@@ -3026,7 +3017,7 @@ object Pipeline {
           concat(array_repeat(lit(0.9f), 8), slice(col("embedding"), 9, 56))
             .as("embedding"))
       val batch = exactCopies.unionByName(nearCopies).unionByName(fresh)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       val corpus = base.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
       val probedBatch = batch.select(col("vec_id"), col("embedding"),
@@ -3058,10 +3049,10 @@ object Pipeline {
       val index = s.read
         .schema("vec_id BIGINT, cell INT, pq_code BIGINT")
         .parquet(p139Fixture(s, dir))
-      def dl = graft.functions.KMeans.dists(col("embedding"), km2, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km2)
       val qs = live.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), pq2.bc, s).as("lut"),
+          P.lutWith(col("embedding"), pq2.bc).as("lut"),
           slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 4).as("probes"))
         .select(col("qid"), col("lut"), explode(col("probes")).as("probe"))
@@ -3117,21 +3108,21 @@ object Pipeline {
       val e = emb(s, dir)
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
       val live = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       val corpusIdx = s.read
         .schema("vec_id BIGINT, cell INT, pq_code BIGINT")
         .parquet(p121Fixture(s, dir))
       val batchIdx = live.filter(col("vec_id") % 17 === 3)
         .select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq.bc).getField("code")
             .as("pq_code"))
       val index = corpusIdx.unionByName(batchIdx)
         .filter(col("vec_id") % 13 =!= 5)
       val qs = live.filter(col("vec_id") % 50 === 0 &&
           col("vec_id") % 13 =!= 5)
         .select(col("vec_id").as("qid"),
-          P.lutWith(col("embedding"), pq.bc, s).as("lut"),
+          P.lutWith(col("embedding"), pq.bc).as("lut"),
           slice(sort_array(transform(dl,
             (d, l) => struct(d.as("d"), l.as("l")))), 1, 4).as("probes"))
         .select(col("qid"), col("lut"), explode(col("probes")).as("probe"))
@@ -3168,7 +3159,7 @@ object Pipeline {
       // each re-ran the WARC plant+parse — same cut as p157's recs
       // persist, conf-gated for the interleaved A/B.
       val recs = ckSigs(s,
-        Warc.parseWarc(Warc.plantPairedWarcs(docsNarrow(s, dir)))
+        Warc.parseWarc(Warc.plantPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload"))))
@@ -3198,7 +3189,7 @@ object Pipeline {
     // pool. Oracle: planted pairs + dhash words + recursive CC, all
     // closed-form. ----
     "p143_paired_crawl_capstone" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3265,7 +3256,7 @@ object Pipeline {
             .as("embedding"))
       val train = e.filter(col("vec_id") % 50 =!= 0)
         .unionByName(contamExact).unionByName(contamNear)
-      def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), m)
       val refHome = evalPanel.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("bigint").as("cell"))
       val probedTrain = train.select(col("vec_id"), col("embedding"),
@@ -3289,7 +3280,7 @@ object Pipeline {
     "p145_audio_text_pairs" -> ((s, dir) => {
       // ckSigs on the parsed-WARC frame — the p142 rationale.
       val recs = ckSigs(s,
-        Warc.parseWarc(Warc.plantAudioPairedWarcs(docsNarrow(s, dir)))
+        Warc.parseWarc(Warc.plantAudioPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload"))))
@@ -3324,7 +3315,7 @@ object Pipeline {
     "p146_video_text_pairs" -> ((s, dir) => {
       // ckSigs on the parsed-WARC frame — the p142 rationale.
       val recs = ckSigs(s,
-        Warc.parseWarc(Warc.plantVideoPairedWarcs(docsNarrow(s, dir)))
+        Warc.parseWarc(Warc.plantVideoPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload"))))
@@ -3415,7 +3406,7 @@ object Pipeline {
     "p149_stream_pair_extract" -> ((s, dir) => {
       import graft.streaming.Streams
       import org.apache.spark.sql.streaming.OutputMode
-      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3459,7 +3450,7 @@ object Pipeline {
     // CC + the full hamming ranking, closed-form. ----
     "p150_hard_negatives" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3509,7 +3500,7 @@ object Pipeline {
       // nothing is served across bench runs.
       // Size-derived panel strategy (r19): the probe panel is a corpus/64
       // sample, so its safe physical shape depends on CORPUS size, not a
-      // constant. Narrow fixture scan (the fanOutIfNarrow condition) ⇒
+      // constant. Narrow fixture scan (Tables.isNarrow) ⇒
       // the panel is KBs by construction and a single partition is the
       // cheapest correct shape (interleaved ConfAb: landing it anyway
       // costs ~10% — A=4.36 s vs B=3.92 s — pure write+read overhead at
@@ -3523,9 +3514,9 @@ object Pipeline {
       // the ORIGIN plan's 868 GB estimate into the checkpoint node, so
       // the hint still dies. Conf toggle spark.graft.p150.land pins the
       // scale branch for A/Bs and specs.)
-      val landPanel = s.conf.getOption("spark.graft.p150.land")
-        .map(_.trim.equalsIgnoreCase("true"))
-        .getOrElse(!graft.engine.Tables.isNarrowScan(s, dir, "documents"))
+      val landPanel = graft.engine.GraftSession.boolConf(s, "spark.graft.p150.land")
+        .getOrElse(!graft.engine.Tables.isNarrow(s,
+          graft.engine.Tables.tableBytes(s, dir, "documents")))
       val panelPath = Layout.sinkRoot(s) + "/" + java.util.UUID
         .nameUUIDFromBytes(("p150panel:" + dir).getBytes("UTF-8")) + "/panel"
       if (landPanel) probes0.write.mode("overwrite").parquet(panelPath)
@@ -3565,7 +3556,7 @@ object Pipeline {
     "p151_pair_language_mixture" -> ((s, dir) => {
       // ckSigs on the parsed-WARC frame — the p142 rationale.
       val recs = ckSigs(s,
-        Warc.parseWarc(Warc.plantPairedWarcs(docsNarrow(s, dir)))
+        Warc.parseWarc(Warc.plantPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload"))))
@@ -3616,7 +3607,7 @@ object Pipeline {
     // FROM-SCRATCH rebuild over the survivors and must match the
     // incremental repair exactly. ----
     "p153_pair_deletion" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3699,7 +3690,7 @@ object Pipeline {
     // ever aggregate; the oracle recomputes every stage from the id
     // arithmetic (host = id % 13). ----
     "p154_pair_yield_funnel" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3744,7 +3735,7 @@ object Pipeline {
     // caption pool, landed through the curated sink. Oracle: planted
     // pairs + fingerprint words + recursive CC, all closed-form. ----
     "p155_audio_paired_capstone" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantAudioPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantAudioPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3790,7 +3781,7 @@ object Pipeline {
     // dHash + CC under the (id/10)*10 copy rule) → captions per
     // canonical clip through the curated sink. ----
     "p156_video_paired_capstone" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantVideoPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantVideoPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3838,7 +3829,7 @@ object Pipeline {
     // consistently. The oracle unions the three closed-form pair twins
     // with the page-wide index arithmetic. ----
     "p157_mixed_pair_router" -> ((s, dir) => {
-      val recs = Warc.parseWarc(Warc.plantAllPairedWarcs(docsNarrow(s, dir)))
+      val recs = Warc.parseWarc(Warc.plantAllPairedWarcs(docs(s, dir)))
         .filter(col("ok") && col("warc_type") === "response")
         .withColumn("kind",
           Warc.contentKind(col("content_type"), col("payload")))
@@ -3989,10 +3980,10 @@ object Pipeline {
       val (km2, pq2) = rebuiltModels(s, dir)
       val d = driftedFrame(s, dir)
       val live = if (pq2.codebook.isEmpty) d.limit(0) else d
-      def dl = graft.functions.KMeans.dists(col("embedding"), km2, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km2)
       live.select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq2.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq2.bc).getField("code")
             .as("pq_code"))
         .write.mode("overwrite").parquet(root)
       root
@@ -4080,7 +4071,7 @@ object Pipeline {
     val m = kmModel(s, dir)
     val e = emb(s, dir)
       .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
-    def dl = graft.functions.KMeans.dists(col("embedding"), m, s)
+    def dl = graft.functions.KMeans.dists(col("embedding"), m)
     val codes = e.select(col("vec_id"),
       P.encode(col("embedding")).getField("code").as("pq_code"),
       (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"))
@@ -4127,7 +4118,7 @@ object Pipeline {
     val km = kmModel(s, dir)
     val e = emb(s, dir)
       .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
-    def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+    def dl = graft.functions.KMeans.dists(col("embedding"), km)
     e.select(col("vec_id"), col("embedding"),
         (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"))
       .join(broadcast(kmCentroidsDf(s, km)), Seq("cell"))
@@ -4172,10 +4163,10 @@ object Pipeline {
         .filter(col("embedding").isNotNull && size(col("embedding")) >= 64)
         .filter(col("vec_id") % 17 =!= 3)
       val base = if (pq.codebook.isEmpty) e.limit(0) else e
-      def dl = graft.functions.KMeans.dists(col("embedding"), km, s)
+      def dl = graft.functions.KMeans.dists(col("embedding"), km)
       base.select(col("vec_id"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"),
-          P.encodeWith(col("embedding"), pq.bc, s).getField("code")
+          P.encodeWith(col("embedding"), pq.bc).getField("code")
             .as("pq_code"))
         .write.mode("overwrite").parquet(root)
       root
@@ -4209,7 +4200,7 @@ object Pipeline {
     * dominates. p83/p84 plant [[Multimodal.plantWavsFp]] instead.
     */
   private def mixedWavs(s: SparkSession, dir: String): DataFrame = {
-    val d = docsNarrow(s, dir)
+    val d = docs(s, dir)
     Multimodal.plantWavs(d.filter(col("doc_id") % 2 === 0))
       .unionByName(Multimodal.plantWavs16(d.filter(col("doc_id") % 2 =!= 0)))
   }

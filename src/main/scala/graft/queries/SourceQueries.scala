@@ -91,7 +91,6 @@ object SourceQueries {
     }),
 
     "q50_expr_keyed_shuffle" -> ((s, dir) => {
-      HashExpressions.register(s)
       Tables.load(s, dir, "documents")
         .groupBy((HashExpressions.asciiSum(col("text")) % 16).as("hk"))
         .agg(count(lit(1)).as("n_docs"),

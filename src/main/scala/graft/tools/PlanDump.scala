@@ -10,7 +10,9 @@ import graft.engine.GraftSession
   * (`plans/r18/<query>_{before,after}.txt`).
   *
   * Usage: `runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <name>...`
-  * writes `<outDir>/<name>_<suffix>.txt`. Note: for sink round-trip
+  * writes `<outDir>/<name>_<suffix>.txt`; the single name `all` dumps
+  * every `SparkEntry.queries` name in sorted order (diff two such
+  * directories with `tools/plandiff.py`). Note: for sink round-trip
   * queries the returned DataFrame is the read-back; their construction
   * side effects (eager writes) run before the plan is captured, so the
   * dumped plan is the final consumer plan plus whatever the query
@@ -32,10 +34,15 @@ object PlanDump {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    rest.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    val names =
+      if (rest == Seq("all")) SparkEntry.queries.keys.toSeq.sorted else rest
+    names.foreach { n =>
+      // A query that fails to build is recorded, not fatal: one bad name
+      // must not cut short an `all` dump.
+      val txt =
+        try SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        catch { case scala.util.control.NonFatal(e) => s"ERROR $e\n" }
       Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
       println(s"[plandump] wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
     }

@@ -11,7 +11,6 @@ object ProfileDedup {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession.builder("local[32]", "graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    HashExpressions.register(spark)
     def time(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f

@@ -226,7 +226,6 @@ object ScaleSmoke {
         .agg(sum(col("content_length"))).collect().length.toLong,
       docs1, docsN, "warcParse")
     bench2({ df =>
-      Bpe.register(df.sparkSession)
       df.select(Bpe.bpeEncode(TextFunctions.normText(col("text"))).as("ids"))
         .agg(sum(size(col("ids")))).collect().length.toLong
     }, docs1, docsN, "bpeEncode")
@@ -236,7 +235,6 @@ object ScaleSmoke {
     // by construction, the same pigeonhole as dhash). popcount sum, not
     // raw hash sum (ANSI Long overflow).
     bench2({ df =>
-      Bpe.registerBig(df.sparkSession)
       df.select(Bpe.bpeEncodeBig(TextFunctions.normText(col("text")))
           .as("ids"))
         .agg(sum(size(col("ids")))).collect().length.toLong
@@ -264,7 +262,6 @@ object ScaleSmoke {
         .agg(sum(col("hamming")), count(lit(1))).collect().length.toLong,
       docs1, docsN, "videoNearDupPairs(cap)")
     bench2({ df =>
-      FastText.register(df.sparkSession)
       df.select(FastText.score(TextFunctions.normText(col("text")))
           .as("score"))
         .agg(sum(col("score"))).collect().length.toLong
@@ -424,14 +421,14 @@ object ScaleSmoke {
       val cents = (0 until kmFixed.k).map(c => (c,
         (0 until 64).map(j => kmFixed.centroids(c * 64 + j))))
         .toDF("cell", "cv")
-      val dl = graft.functions.KMeans.dists(col("embedding"), kmFixed, spark)
+      val dl = graft.functions.KMeans.dists(col("embedding"), kmFixed)
       df.select(col("vec_id"), col("embedding"),
           (array_position(dl, array_min(dl)) - 1).cast("int").as("cell"))
         .join(broadcast(cents), Seq("cell"))
         .select(graft.functions.Pq.encodeWith(
           zip_with(col("embedding"), col("cv"),
             (x, c) => (x.cast("double") - c).cast("float")),
-          pqFixed.bc, spark).getField("code").as("c"))
+          pqFixed.bc).getField("code").as("c"))
         .agg(sum(bit_count(col("c")))).collect().length.toLong
     }, emb1, embN, "residualEncode(fixed)")
     // Round-18 part 2: pair extraction is a narrow regex pass + a slim

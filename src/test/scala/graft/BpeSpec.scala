@@ -10,7 +10,6 @@ class BpeSpec extends AnyFunSuite {
 
   private def encode(s: String): Seq[Int] = {
     import spark.implicits._
-    Bpe.register(spark)
     Seq(s).toDF("t").select(Bpe.bpeEncode(col("t")))
       .collect()(0).getSeq[Int](0)
   }
@@ -56,7 +55,6 @@ class BpeSpec extends AnyFunSuite {
   test("codegen and interpreted eval agree bit-for-bit") {
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
-      Bpe.register(s)
       Seq((1L, "the quick brown fox ingesting other things"),
           (2L, "a2z !!! mixed 42 cases"),
           (3L, ""),
@@ -77,7 +75,6 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, "the thing"), (2L, "other words")).toDF("id", "text")
       .write.mode("overwrite").parquet(dir)
-    Bpe.register(spark)
     val plan = spark.read.parquet(dir)
       .selectExpr("id", "bpe_encode(text) AS ids")
       .queryExecution.executedPlan.toString()
@@ -129,13 +126,12 @@ class BpeSpec extends AnyFunSuite {
   test("big vocab: codegen and interpreted eval agree bit-for-bit") {
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
-      Bpe.registerBig(s)
       Seq((1L, "the quick brown fox ingesting other things"),
           (2L, "aaaa eaa ea a2z !!! 42"),
           (3L, ""),
           (4L, "zzzz yyxx wwvv aabb"))
         .toDF("id", "text")
-        .selectExpr("id", "bpe_encode_big(text) AS ids")
+        .select(col("id"), Bpe.bpeEncodeBig(col("text")).as("ids"))
         .collect().map(_.toString).sorted
     }
     val interp = spark.newSession()
@@ -150,9 +146,8 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, "the thing"), (2L, "other words")).toDF("id", "text")
       .write.mode("overwrite").parquet(dir)
-    Bpe.registerBig(spark)
     val plan = spark.read.parquet(dir)
-      .selectExpr("id", "bpe_encode_big(text) AS ids")
+      .select(col("id"), Bpe.bpeEncodeBig(col("text")).as("ids"))
       .queryExecution.executedPlan.toString()
     assert(plan.contains("*(1) Project"),
       s"bpe_encode_big fell out of WSCG:\n$plan")

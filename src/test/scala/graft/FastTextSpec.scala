@@ -61,7 +61,6 @@ class FastTextSpec extends AnyFunSuite {
   test("codegen and interpreted eval agree bit-for-bit") {
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
-      FastText.register(s)
       Seq((1L, "the quick brown fox jumps over the lazy dog"),
           (2L, "aaaa eaa ea a2z !!! 42"),
           (3L, ""),
@@ -82,7 +81,6 @@ class FastTextSpec extends AnyFunSuite {
     import spark.implicits._
     Seq((1L, "some quality text"), (2L, "junk")).toDF("id", "text")
       .write.mode("overwrite").parquet(dir)
-    FastText.register(spark)
     val plan = spark.read.parquet(dir)
       .selectExpr("id", "fasttext_score(text) AS score")
       .queryExecution.executedPlan.toString()

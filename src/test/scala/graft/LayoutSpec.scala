@@ -42,9 +42,8 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("SQL integer literals: interpreted (constant-fold) == codegen == java") {
-    HashExpressions.register(spark)
     // Integer literals constant-fold through interpreted eval — this is the
-    // path that used to ClassCastException before the registration sites
+    // path that used to ClassCastException before the builder
     // wrapped arguments in Cast(_, LongType).
     val folded = spark.sql("SELECT interleave_bits(3, 5) AS z")
       .collect()(0).getLong(0)
@@ -72,7 +71,6 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("expression stays in whole-stage codegen") {
-    HashExpressions.register(spark)
     val plan = lineitem
       .select(HashExpressions.interleaveBits(col("l_partkey"), col("l_suppkey")))
       .queryExecution.executedPlan.toString
@@ -82,7 +80,6 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-order clusters BOTH columns; single-column sort only one") {
-    HashExpressions.register(spark)
     val df = lineitem.select(col("l_partkey"), col("l_suppkey"))
     val parts = 16
 

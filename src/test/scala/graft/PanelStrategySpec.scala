@@ -17,6 +17,7 @@ class PanelStrategySpec extends AnyFunSuite {
     try {
       val df = SparkEntry.queries("p150_hard_negatives")(spark, sf01)
       (df.queryExecution.executedPlan.toString,
+        df.inputFiles.exists(_.contains("/panel/")),
         df.collect().map(_.toString).sorted.toSeq)
     } finally spark.conf.unset("spark.graft.p150.land")
   }
@@ -24,20 +25,46 @@ class PanelStrategySpec extends AnyFunSuite {
   test("fixture branch (land=false): coalesced panel, no landed scan; " +
     "scale branch (land=true): panel read from parquet with real stats; " +
     "identical results") {
-    val (fixturePlan, fixtureRows) = run(land = false)
-    assert(fixturePlan.contains("Coalesce"),
+    val (fixturePlan, fixtureLanded, fixtureRows) = run(land = false)
+    assert(fixturePlan.contains("Coalesce 1"),
       s"fixture branch must coalesce the panel:\n$fixturePlan")
-    val (scalePlan, scaleRows) = run(land = true)
-    // The landed panel appears as a parquet scan of the p150panel sink;
-    // with real (tiny) stats the broadcast hint survives BroadcastGuard,
-    // so the theta join plans as a broadcast nested loop, not a
-    // cartesian over a single-partition panel.
-    assert(scalePlan.contains("p150panel") ||
-      scalePlan.contains("BroadcastNestedLoopJoin"),
-      s"scale branch must read the landed panel:\n$scalePlan")
-    assert(!scalePlan.contains("Coalesce (1)"),
+    assert(!fixtureLanded, "fixture branch must not read a landed panel")
+    val (scalePlan, scaleLanded, scaleRows) = run(land = true)
+    // The landed panel is a parquet scan of the per-invocation
+    // `<sink>/<uuid>/panel` directory.
+    assert(scaleLanded, s"scale branch must read the landed panel:\n$scalePlan")
+    assert(!scalePlan.contains("Coalesce 1"),
       s"scale branch must not carry a single-partition panel:\n$scalePlan")
     assert(fixtureRows == scaleRows,
       "panel strategy changed the query's rows")
+  }
+
+  test("a malformed spark.graft.p150.land falls back to the size-derived " +
+    "branch, not the single-partition one") {
+    import graft.engine.Tables
+    // Shrink the split size until the fixture scan counts as wide, so the
+    // size-derived default is the landed (scale) branch.
+    val bytes = Tables.tableBytes(spark, sf01, "documents")
+    val splitKey = "spark.sql.files.maxPartitionBytes"
+    val split0 = spark.conf.get(splitKey)
+    spark.conf.set(splitKey,
+      math.max(1L, bytes / spark.sparkContext.defaultParallelism).toString)
+    spark.conf.set("spark.graft.p150.land", "yes")
+    try {
+      assert(!Tables.isNarrow(spark, bytes))
+      val df = SparkEntry.queries("p150_hard_negatives")(spark, sf01)
+      assert(df.inputFiles.exists(_.contains("/panel/")),
+        "malformed value must fall back to the landed scale branch")
+    } finally {
+      spark.conf.unset("spark.graft.p150.land")
+      spark.conf.set(splitKey, split0)
+    }
+  }
+
+  test("isNarrow: tiny scans are narrow; a failed stat (Long.MaxValue) is not") {
+    import graft.engine.Tables
+    assert(Tables.isNarrow(spark, 1L))
+    assert(!Tables.isNarrow(spark, Long.MaxValue))
+    assert(!Tables.isNarrow(spark, Tables.tableBytes(spark, sf01, "no_such_table")))
   }
 }

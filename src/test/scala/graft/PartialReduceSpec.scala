@@ -64,4 +64,25 @@ class PartialReduceSpec extends AnyFunSuite {
     assert(withRule.sameElements(baseline),
       "PartialReduce changed the aggregation result")
   }
+
+  test("malformed spark.graft.partialReduce (=1) falls back to off, and " +
+    "the query still returns rows") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.partialReduce", "1")
+    val df = highCard(s2)
+    assert(df.collect().nonEmpty)
+    assert(!aggModes(df.queryExecution.executedPlan).contains("PartialMerge"))
+  }
+
+  test("boolConf reads only true/false; anything else is None") {
+    import graft.engine.GraftSession.boolConf
+    val s2 = spark.newSession()
+    val key = "spark.graft.test.flag"
+    assert(boolConf(s2, key).isEmpty)
+    for ((v, want) <- Seq("true" -> Some(true), " FALSE " -> Some(false),
+        "1" -> None, "yes" -> None, "" -> None)) {
+      s2.conf.set(key, v)
+      assert(boolConf(s2, key) == want, s"'$v'")
+    }
+  }
 }

@@ -226,7 +226,6 @@ class PqSpec extends AnyFunSuite {
   test("codegen and interpreted eval agree bit-for-bit") {
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
-      Pq.register(s)
       (0 until 8).map(i => (i.toLong, vec(i).toSeq)).toDF("id", "v")
         .selectExpr("id", "pq_encode(v) AS pq", "pq_lut(v) AS lut",
           "pq_coarse_dists(v) AS cd", "pq_residual_encode(v) AS rq",
@@ -247,7 +246,6 @@ class PqSpec extends AnyFunSuite {
     import spark.implicits._
     (0 until 4).map(i => (i.toLong, vec(i).toSeq)).toDF("id", "v")
       .write.mode("overwrite").parquet(dir)
-    Pq.register(spark)
     val plan = spark.read.parquet(dir)
       .selectExpr("id", "pq_encode(v).code AS c")
       .queryExecution.executedPlan.toString()
@@ -268,7 +266,6 @@ class PqSpec extends AnyFunSuite {
   test("non-float-array inputs fail at ANALYSIS with a clear message, " +
     "not a runtime ClassCastException mid-scan") {
     import spark.implicits._
-    Pq.register(spark)
     val dbl = (0 until 2)
       .map(i => (i.toLong, vec(i).map(_.toDouble).toSeq)).toDF("id", "v")
     for (e <- Seq("pq_encode(v)", "pq_lut(v)", "pq_coarse_dists(v)",
@@ -288,7 +285,6 @@ class PqSpec extends AnyFunSuite {
   test("pq_residual_lut accepts a BIGINT cell (joined probe columns are " +
     "bigint) identically to int, and out-of-range longs degrade to null") {
     import spark.implicits._
-    Pq.register(spark)
     val df = (0 until 4).map(i => (i.toLong, vec(i).toSeq)).toDF("id", "v")
     val viaInt = df.selectExpr("id", "pq_residual_lut(v, 2) AS l")
       .collect().map(_.toString).sorted

@@ -44,7 +44,7 @@ class PqTrainSpec extends AnyFunSuite {
     val df = corpus(50)
     val mo = Pq.train(df, "vec_id", "embedding", iters = 2)
     val got = df.select(col("vec_id"),
-        Pq.encodeWith(col("embedding"), mo.bc, spark)
+        Pq.encodeWith(col("embedding"), mo.bc)
           .getField("code").as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     import spark.implicits._

@@ -87,7 +87,6 @@ class QuantizeSpec extends AnyFunSuite {
   test("sign_project SQL accepts INT and BIGINT literals for dims and seed") {
     import spark.implicits._
     import graft.functions.VectorExpressions
-    VectorExpressions.register(spark)
     val df = Seq((1L, Seq.fill(8)(0.5f))).toDF("vec_id", "embedding")
     df.createOrReplaceTempView("sp_lit_test")
     // 4L parses as a BIGINT literal — previously a bare ClassCastException

@@ -29,7 +29,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("LSH buckets: deterministic, in-range, exactly one per vector") {
-    HashExpressions.register(spark)
     val b1 = Similarity.bucketed(corpus, nBits = 8)
       .select("vec_id", "bucket").collect().map(r => (r.getLong(0), r.getInt(1)))
     val b2 = Similarity.bucketed(corpus, nBits = 8)
@@ -128,7 +127,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("lshTopK recall improves with probing and beats the random baseline; " +
     "every returned cos matches the exact cos") {
-    HashExpressions.register(spark)
     val k = 10
     val exact = Similarity.bruteForceTopK(corpus, queries, k)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -182,7 +180,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("cosineNearDupPairs only emits pairs above threshold, symmetric-free") {
-    HashExpressions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // Near-random corpus vectors have no cos >= 0.95 pairs, which would
@@ -202,7 +199,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("cosineNearDupPairs finds planted duplicate vectors (LSH bucket " +
     "path: identical vectors always share a bucket)") {
-    HashExpressions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // Plant exact duplicates of vecs 0-4 under ids 10000-10004: cos = 1.0,
@@ -335,7 +331,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("dot_f SQL coercion: int arrays fold numerically; NULL argument is NULL") {
-    // The registration sites cast non-float/double arguments to
+    // The SQL builders cast non-float/double arguments to
     // array<double> (ExpectsInputTypes is private[sql] on this build), so
     // the HOF form's semantics survive: ints work, NULL stays NULL.
     val r = spark.sql("SELECT dot_f(array(1, 2), array(3, 4)) AS d").collect()(0)
@@ -361,7 +357,7 @@ class SimilaritySpec extends AnyFunSuite {
           VectorFunctions.l2Squared(col("a"), col("b")).as("l2"))
       val row = df.collect()(0)
       assert(row.getDouble(0) == 11.0 && row.getDouble(1) == 8.0,
-        "Column helpers must self-register on the active session")
+        "Column helpers must not depend on the function registry")
     } finally SparkSession.setActiveSession(spark)
   }
 

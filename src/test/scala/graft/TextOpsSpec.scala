@@ -11,7 +11,6 @@ class TextOpsSpec extends AnyFunSuite {
   test("nfcNormalize: composes decomposed marks, idempotent, matches the JDK") {
     import spark.implicits._
     import graft.functions.HashExpressions
-    HashExpressions.register(spark)
     val samples = Seq(
       "cafe\u0301",           // e + combining acute -> \u00e9
       "nai\u0308ve",          // i + combining diaeresis -> \u00ef
